@@ -92,28 +92,14 @@ class TableIO:
         snaps = self._live_snapshots(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no committed snapshots")
-        if all(
-            "ref" not in s and s.get("fmt") != "csv" and s.get("mode") != "replace"
-            for s in snaps
-        ):
+        if all("ref" not in s and s.get("fmt") != "csv" for s in snaps):
             # fast path: one multi-dir parquet scan
             return spark.read.parquet(
                 *[os.path.join(self._tdir(table), s["dir"]) for s in snaps]
             )
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        # newest-wins partition shadowing: walk snapshots newest-first; each
-        # snapshot contributes only partitions no NEWER replace-snapshot
-        # already covers (the partition filter prunes at directory level for
-        # partitioned snapshot dirs)
         out = None
-        shadowed: dict[str, set] = {}
-        for s in reversed(snaps):
+        for s in reversed(snaps):  # newest first: the row order readers get
             df = self._snapshot_df(spark, table, s)
-            for col, parts in shadowed.items():
-                df = df.filter(~F.col(col).isin(sorted(parts)))
-            if s.get("mode") == "replace":
-                shadowed.setdefault(s["part_col"], set()).update(s["parts"])
             out = df if out is None else out.unionByName(df)
         return out
 
@@ -136,7 +122,6 @@ class TableIO:
         mode: str = "append",
         compression: str | None = None,
         options: dict[str, str] | None = None,
-        partition_by: str | None = None,
     ) -> int:
         """Write df as a new snapshot of ``table``; returns the snapshot id.
 
@@ -153,70 +138,8 @@ class TableIO:
             writer = writer.option("compression", compression)
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
-        if partition_by:
-            # cluster rows by the partition column first: otherwise every
-            # write task opens a file per partition value it sees
-            # (tasks x partitions tiny files — measured 17x slowdown of the
-            # wave-0 seed_state commit + every later read of it)
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            writer = (
-                df.repartition(F.col(partition_by)).write.mode("overwrite")
-            )
-            if compression:
-                writer = writer.option("compression", compression)
-            for k, v in (options or {}).items():
-                writer = writer.option(k, v)
-            writer = writer.partitionBy(partition_by)
         writer.parquet(os.path.join(self._tdir(table), rel))
-        entry = {"id": next_id, "dir": rel, "wave": wave, "mode": mode}
-        if partition_by:
-            entry["part_col"] = partition_by
-        manifest["snapshots"].append(entry)
-        self._store_manifest(table, manifest)
-        return next_id
-
-    def commit_replace(
-        self,
-        df: DataFrame,
-        table: str,
-        wave: int,
-        part_col: str,
-        parts: list,
-        mode: str = "replace",
-    ) -> int:
-        """Partition-replace commit (Iceberg ``REPLACE WHERE`` /
-        dynamic-partition-overwrite shape): ``df`` holds ONLY the listed
-        partitions' rows; readers see them shadow the same partitions of
-        every earlier live snapshot. The wave writeback uses this to commit
-        O(touched-partitions) files per wave instead of rewriting the whole
-        seed table (round-2 VERDICT #5). Data files land under
-        ``part_col=value`` subdirs so a partition filter prunes at the
-        directory level."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        manifest = self._load_manifest(table)
-        next_id = self._next_id(table, manifest)
-        rel = f"snap-{next_id:05d}"
-        # cluster rows by partition before the write: without this every task
-        # opens a file per partition value (tasks x partitions small files);
-        # with it the commit is ~one file per touched partition
-        (
-            df.repartition(max(1, len(parts)), F.col(part_col))
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(os.path.join(self._tdir(table), rel))
-        )
-        manifest["snapshots"].append(
-            {
-                "id": next_id,
-                "dir": rel,
-                "wave": wave,
-                "mode": mode,
-                "part_col": part_col,
-                "parts": sorted(parts),
-            }
-        )
+        manifest["snapshots"].append({"id": next_id, "dir": rel, "wave": wave, "mode": mode})
         self._store_manifest(table, manifest)
         return next_id
 

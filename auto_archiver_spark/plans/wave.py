@@ -12,8 +12,12 @@ One wave = one declarative DataFrame plan (SURVEY.md §3 "Spark lifecycle"):
       -> fetch+enrich mapInPandas (Arrow batches) -> staged ONCE (fetch_out)
       -> commits: images (zero-copy ref into fetch_out + dedup delete keys —
          merge-on-read, bytes written once), archive_results append, url_seen
-         append, sha_seen/bloom-sidecar deltas, seed_state writeback,
-         per-wave metrics row (incl. per-partition lineage)
+         append, sha_seen/bloom-sidecar deltas, per-wave metrics row (incl.
+         per-partition lineage)
+
+The seed-state writeback needs no per-wave commit: its cells are a function
+of the committed archive_results, merged on read over the wave-0 seed_base
+(operators/writeback.py read_seed_state).
 
 State between waves lives in TableIO snapshots; the checkpoint commits the
 wave atomically across tables. Deferred rows (admission budget exhausted)
@@ -40,7 +44,7 @@ from ..operators.frontier import (
     salted_fetch_repartition,
     seed_filter,
 )
-from ..operators.writeback import init_seed_state, wave_writeback
+from ..operators.writeback import init_seed_state
 
 URL_SEEN_SCHEMA = "url_hash long, url_norm string, first_seen_wave int"
 FRONTIER_COLS = ["sheet", "row_idx", "url", "status", "folder"]
@@ -93,7 +97,6 @@ class CrawlConfig:
     # wave — simulates a mid-wave task death between blob append and commit
     crash_during_fetch_wave: int | None = None
     dedup_content: bool = True  # A2: content-addressed image dedup before sink
-    writeback: bool = True  # J3/K4: only-fill-empty MERGE into seed_state
     strict_urls: bool = False  # P1 via exact ipaddress UDF (reference parity)
     allow_sheets: tuple = ()
     block_sheets: tuple = ()
@@ -210,13 +213,11 @@ def _run_crawl(
             f_frontier = boot.submit(
                 io.commit, frontier, "frontier", 0, "overwrite"
             )
-            if config.writeback:
-                # bucket-partitioned base so later replace-commits and
-                # bucket-filtered reads prune at the directory level
-                boot.submit(
-                    io.commit, init_seed_state(seed), "seed_state", 0,
-                    "overwrite", None, None, "wb_bucket",
-                ).result()
+            # the blank writeback base, committed once: read_seed_state
+            # merges every wave's archive_results onto it on read
+            boot.submit(
+                io.commit, init_seed_state(seed), "seed_base", 0, "overwrite"
+            ).result()
             f_frontier.result()
     else:
         frontier = io.read(spark, "frontier")
@@ -408,10 +409,8 @@ def _run_crawl(
         # independent. Sequentially they serialized ~10 tiny Spark jobs'
         # scheduling latency per wave (r7: ~4.5 s wall for ~4 s of cpu across
         # images/results/stats/writeback/state segments). A thread pool runs
-        # them overlapped; the only true edges are expressed as futures:
-        #   * writeback needs the committed archive_results read-back AND the
-        #     touched-bucket set from the fetch stats;
-        #   * lineage and the link expander need the read-back too.
+        # them overlapped; the only true edge is expressed as a future:
+        # lineage and the link expander need the archive_results read-back.
 
         def t_images():
             # The images snapshot is a ZERO-COPY REF into the staged
@@ -474,19 +473,16 @@ def _run_crawl(
                 wave,
                 options=_state_opts,
             )
-            # downstream consumers (writeback, lineage, expander) re-read the
+            # downstream consumers (lineage, expander) re-read the
             # committed snapshot instead of re-running the to_archive_results
             # chain over fetch_out once per job; the wave filter prunes to
             # this wave's row group via parquet predicate pushdown
             return sid, io.read(spark, "archive_results").filter(F.col("wave") == wave)
 
         def t_stats():
-            from ..operators.writeback import wb_bucket_expr  # noqa: PLC0415
-
             fs = fetched.agg(
                 F.sum((F.col("status") == "success").cast("long")).alias("ok"),
                 F.sum("total_bytes").alias("bytes"),
-                F.collect_set(wb_bucket_expr()).alias("buckets"),
             ).collect()[0]
             adm_row = adm.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -494,30 +490,6 @@ def _run_crawl(
                 F.sum(F.col("robots_blocked").cast("long")).alias("robots"),
             ).collect()[0]
             return cand.count(), adm_row, fs
-
-        def _commit_writeback():
-            if not config.writeback:
-                return None
-            # J3/K4: MERGE this wave's results into the seed-state table
-            # (only-fill-empty cells; status always) — Iceberg MERGE INTO on a
-            # real deployment. The commit is partition-replace: only the row
-            # buckets this wave's results touch are re-read, merged and
-            # rewritten — O(wave) files per wave, not O(seed) (VERDICT r2 #5)
-            _, _, fs = f_stats.result()
-            _, results_rb = f_results.result()
-            touched = sorted(fs["buckets"] or [])
-            if not touched:
-                return None
-            seed_sub = io.read(spark, "seed_state").filter(
-                F.col("wb_bucket").isin(touched)
-            )
-            return io.commit_replace(
-                wave_writeback(seed_sub, results_rb),
-                "seed_state",
-                wave,
-                part_col="wb_bucket",
-                parts=touched,
-            )
 
         def _commit_url_seen():
             return io.commit(
@@ -634,7 +606,7 @@ def _run_crawl(
             return io.commit(lineage.coalesce(1), "lineage", wave, options=_state_opts)
 
         # submit order puts the heavy/critical thunks first; max_workers
-        # leaves headroom so the future-blocked thunks (writeback, lineage,
+        # leaves headroom so the future-blocked thunks (lineage,
         # expander-frontier) can never deadlock behind a full pool
         pool = ThreadPoolExecutor(max_workers=10)
         try:
@@ -648,7 +620,6 @@ def _run_crawl(
                 futs["url_seen_cuckoo"] = pool.submit(_commit_cuckoo)
             elif config.use_bloom:
                 futs["url_seen_bloom"] = pool.submit(_commit_bloom)
-            f_writeback = pool.submit(_commit_writeback)
             f_lineage = pool.submit(_commit_lineage)
             f_frontier = pool.submit(_commit_frontier)
 
@@ -656,10 +627,6 @@ def _run_crawl(
             mark("results_commit")
             n_cand, adm_stats, fetch_stats = f_stats.result()
             mark("wave_stats")
-            sid = f_writeback.result()
-            if sid is not None:
-                snap_ids["seed_state"] = sid
-            mark("writeback_commit")
             snap_ids.update(f_images.result())
             snap_ids["lineage"] = f_lineage.result()
             snap_ids["frontier"], next_frontier = f_frontier.result()

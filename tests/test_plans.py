@@ -152,26 +152,6 @@ def test_url_query_pushdown_end_to_end(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_seed_state_bucket_filter_prunes_partitions(spark, tmp_path):
-    """The partition-replace writeback's bucket-filtered read must prune at
-    the directory level (PartitionFilters in the scan), so per-wave merges
-    scan O(touched buckets), not the whole seed table."""
-    from auto_archiver_spark.operators.writeback import init_seed_state
-    from auto_archiver_spark.plans.tableio import TableIO
-
-    io = TableIO(str(tmp_path))
-    seed = frontier_seed_df(spark, 400)
-    io.commit(init_seed_state(seed), "seed_state", wave=0, mode="overwrite",
-              partition_by="wb_bucket")
-    pruned = io.read(spark, "seed_state").filter(F.col("wb_bucket").isin([3, 9]))
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "wb_bucket" in plan.split("PartitionFilters")[1].split("]")[0]
-    # and the scan actually lists a fraction of the files
-    n_all = io.read(spark, "seed_state").count()
-    n_sub = pruned.count()
-    assert 0 < n_sub < n_all
-
-
 def test_train_centroids_runs_no_count_job(spark, monkeypatch):
     """r3 VERDICT #7: the default centroid build must not run an implicit
     full count() job before sampling — the no-fraction path takes a bounded

@@ -11,10 +11,12 @@ import hashlib
 import os
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from auto_archiver_spark.operators.writeback import read_seed_state
 from auto_archiver_spark.plans.blobs import materialize_bytes, vacuum_blobs
 from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
 from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
@@ -34,7 +36,9 @@ def _run(spark, root, **extra):
 
 
 def _fingerprint(spark, io, table, drop=()):
-    df = io.read(spark, table).drop(*drop)
+    # the seed state is merged on read, not a stored table
+    df = read_seed_state(spark, io) if table == "seed_state" else io.read(spark, table)
+    df = df.drop(*drop)
     cols = sorted(df.columns)
     return sorted(tuple(str(x) for x in r) for r in df.select(*cols).collect())
 
@@ -45,6 +49,22 @@ def _disk_blobs(root):
         for p in glob.glob(os.path.join(root, "blobs", "**", "*"), recursive=True)
         if os.path.isfile(p)
     }
+
+
+def _settled_blobs(root, quiet=3.0, limit=60.0):
+    """The blob listing once it has not changed for ``quiet`` seconds. Fetch
+    tasks still running when the injected crash failed the job are killed
+    asynchronously, and may still close (rename into place) their sidecar
+    files after the exception has reached the driver."""
+    seen = _disk_blobs(root)
+    since = time.monotonic()
+    end = since + limit
+    while time.monotonic() - since < quiet and time.monotonic() < end:
+        time.sleep(0.5)
+        now = _disk_blobs(root)
+        if now != seen:
+            seen, since = now, time.monotonic()
+    return seen
 
 
 def test_torn_wave_orphans_vacuumed_resume_identical(spark):
@@ -66,7 +86,7 @@ def test_torn_wave_orphans_vacuumed_resume_identical(spark):
         assert state is not None and state["wave"] == 0
 
         # the torn wave left orphan blob files on disk
-        disk = _disk_blobs(root_b)
+        disk = _settled_blobs(root_b)
         orphans = {p for p in disk if not p.startswith("blobs/wave=0/")}
         assert orphans, "injected crash should leave wave-1 blob orphans"
         referenced = {

@@ -7,9 +7,11 @@ from pyspark.sql import functions as F
 from auto_archiver_spark.operators.writeback import (
     CELL_CAP,
     init_seed_state,
+    read_seed_state,
     wave_writeback,
     writeback_merge,
 )
+from auto_archiver_spark.plans.tableio import TableIO
 
 
 @pytest.fixture(scope="module")
@@ -111,10 +113,119 @@ def test_wave_writeback_shapes(spark):
     assert rows[2].status == "" and rows[2].hash == ""
 
 
+def _by_key(df):
+    rows = df.collect()
+    out = {(r.sheet, r.row_idx): r.asDict() for r in rows}
+    assert len(out) == len(rows), "duplicate seed-state keys"
+    return out
+
+
+def _sequential_oracle(spark, io):
+    """The per-wave MERGE the crawl used to materialize: wave_writeback
+    applied to the seed base once per wave, in wave order."""
+    results = io.read(spark, "archive_results")
+    state = io.read(spark, "seed_base")
+    waves = sorted(r.wave for r in results.select("wave").distinct().collect())
+    for w in waves:
+        state = wave_writeback(state, results.filter(F.col("wave") == w)).localCheckpoint()
+    return state
+
+
+def test_seed_state_view_equals_sequential_merge(spark, tmp_path):
+    """read_seed_state (one fold + one MERGE over all waves) equals the
+    wave-by-wave MERGE on the edge cases of the only-fill-empty rule."""
+    from auto_archiver_spark.operators.fetch import MEDIA_STRUCT
+
+    seed = spark.createDataFrame(
+        [("ws1", i, f"u{i}", "prefilled" if i == 9 else "", "f") for i in range(1, 10)],
+        "sheet string, row_idx long, url string, status string, folder string",
+    )
+    big = "x" * (CELL_CAP + 10)
+    blank_head = " " * (CELL_CAP - 1) + "y"  # blank once truncated
+    # (row_idx, wave, status, title, phash or None for a failed fetch)
+    rows = [
+        (1, 0, "success", "", 1), (1, 1, "success", "filled", 2),  # blank then filled
+        (2, 0, "success", "   ", None), (2, 1, "success", "", None),  # blanks: last wins
+        (3, 0, "nothing archived", "A", None), (3, 2, "success", "B", 3),  # status overwritten
+        (4, 0, "success", "X", 4), (4, 1, None, None, None),  # null new values
+        (5, 1, "nothing archived", None, None), (5, 2, "success", "ok", 5),  # fail, then ok
+        (6, 0, "success", big, 6),  # over CELL_CAP
+        (7, 0, "success", blank_head, 7), (7, 1, "success", "Z", 8),
+        # 8: seed row with no result; 9: prefilled status, no result
+        (10_000_001, 0, "success", "child", 9),  # child row, not in the seed
+    ]
+    media = F.when(
+        F.col("phash").isNotNull(),
+        F.array(
+            F.named_struct(
+                F.lit("id"), F.lit("img"),
+                F.lit("mimetype"), F.lit("image/png"),
+                F.lit("hash"), F.concat(F.lit("SHA-256:"), F.col("phash").cast("string")),
+                F.lit("phash"), F.col("phash"),
+                F.lit("bytes"), F.lit(10).cast("bigint"),
+                F.lit("urls"), F.array(F.lit("u")),
+                F.lit("props"), F.create_map(F.lit("k"), F.lit("v")),
+            ).cast(MEDIA_STRUCT)
+        ),
+    ).otherwise(F.array().cast(f"array<{MEDIA_STRUCT}>"))
+    results = spark.createDataFrame(
+        [("ws1", *r) for r in rows],
+        "sheet string, row_idx long, wave int, status string, title string, phash bigint",
+    ).select(
+        "sheet", "row_idx", "wave", "status", "title",
+        # one distinct instant per (wave, row), so `date` shows which wave won
+        F.timestamp_seconds(
+            F.lit(1_700_000_000) + F.col("wave") * 86_400 + F.col("row_idx") % 100
+        ).alias("processed_at"),
+        media.alias("media"),
+    )
+    io = TableIO(str(tmp_path))
+    io.commit(init_seed_state(seed), "seed_base", 0, "overwrite")
+    for w in range(3):
+        io.commit(results.filter(F.col("wave") == w), "archive_results", w)
+
+    view = _by_key(read_seed_state(spark, io))
+    assert view == _by_key(_sequential_oracle(spark, io))
+    assert set(view) == {("ws1", i) for i in range(1, 10)}
+    assert view[("ws1", 1)]["title"] == "filled"
+    assert view[("ws1", 2)]["title"] == ""
+    assert view[("ws1", 3)]["status"] == "success" and view[("ws1", 3)]["title"] == "A"
+    assert view[("ws1", 4)]["status"] == "success" and view[("ws1", 4)]["title"] == "X"
+    assert view[("ws1", 5)]["pdq"] == "5" and view[("ws1", 5)]["hash"] == "SHA-256:5"
+    assert view[("ws1", 5)]["date"] == "2023-11-15T22:13:25Z"  # the failed wave's
+    assert view[("ws1", 6)]["title"] == big[: CELL_CAP - 1]
+    assert view[("ws1", 7)]["title"] == "Z"
+    assert view[("ws1", 8)]["status"] == "" and view[("ws1", 8)]["date"] == ""
+    assert view[("ws1", 9)]["status"] == "prefilled"
+
+    # the date cell is rendered in UTC whatever the reader's session zone
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        assert _by_key(read_seed_state(spark, io)) == view
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_seed_state_view_equals_sequential_merge_on_recrawl(spark, tmp_path):
+    """A recrawl_failed crawl writes some keys in two waves (failed, then
+    archived): the merged-on-read view equals the wave-by-wave MERGE on
+    every column, `date` included."""
+    from tests.test_recrawl import _run
+
+    io, _, _ = _run(spark, str(tmp_path))
+    res = io.read(spark, "archive_results")
+    assert res.groupBy("sheet", "row_idx").agg(
+        F.countDistinct("wave").alias("n")
+    ).filter("n > 1").count() > 0
+    assert _by_key(read_seed_state(spark, io)) == _by_key(_sequential_oracle(spark, io))
+
+
 def test_writeback_survives_resume(spark, tmp_path):
-    """Kill after wave k, restart: the final seed_state matches the
-    uninterrupted run (checkpoint contract extends to seed_state)."""
-    from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
+    """Kill after wave k, restart: the final seed state matches the
+    uninterrupted run (checkpoint contract extends to the seed state)."""
+    from auto_archiver_spark.plans.tableio import WaveCheckpoint
     from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
     from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
@@ -129,8 +240,8 @@ def test_writeback_survives_resume(spark, tmp_path):
     run_crawl(spark, io_b, cp_b, seed, policy, cfg, stop_after_wave=0)  # "crash"
     run_crawl(spark, io_b, cp_b, seed, policy, cfg)  # resume
 
-    a = {(r.sheet, r.row_idx): r for r in io_a.read(spark, "seed_state").collect()}
-    b = {(r.sheet, r.row_idx): r for r in io_b.read(spark, "seed_state").collect()}
+    a = {(r.sheet, r.row_idx): r for r in read_seed_state(spark, io_a).collect()}
+    b = {(r.sheet, r.row_idx): r for r in read_seed_state(spark, io_b).collect()}
     assert a.keys() == b.keys()
     for k in a:
         # `date` differs run-to-run (wall clock); everything else is stable
@@ -142,36 +253,25 @@ def test_writeback_survives_resume(spark, tmp_path):
 
 
 def test_wave_writeback_commits_o_wave_partitions(spark, tmp_path):
-    """VERDICT r2 #5: the per-wave seed_state commit touches only the row
-    buckets present in that wave's results — its snapshot dir holds O(wave)
-    partition dirs, never the full bucket range."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from auto_archiver_spark.operators.writeback import wb_bucket_expr
-    from auto_archiver_spark.plans.tableio import TableIO, WaveCheckpoint
+    """VERDICT r2 #5: the per-wave writeback cost is O(wave), not O(seed) —
+    merge-on-read makes it zero: no wave after the bootstrap commits any
+    seed-state data, and the merged view stays consistent."""
+    from auto_archiver_spark.plans.tableio import WaveCheckpoint
     from auto_archiver_spark.plans.wave import CrawlConfig, run_crawl
     from auto_archiver_spark.sources.fixture import frontier_seed_df, host_policy_df
 
     root = str(tmp_path)
     io, cp = TableIO(root), WaveCheckpoint(root)
     seed = frontier_seed_df(spark, 600)
-    run_crawl(spark, io, cp, seed, host_policy_df(spark),
-              CrawlConfig(wave_seconds=6.0, fetch_partitions=8))
-    snaps = io._load_manifest("seed_state")["snapshots"]
-    assert snaps[0]["mode"] == "overwrite" and snaps[0].get("part_col") == "wb_bucket"
-    replaces = [s for s in snaps[1:]]
-    assert replaces and all(s["mode"] == "replace" for s in replaces)
-    for s in replaces:
-        sdir = os.path.join(root, "seed_state", s["dir"])
-        dirs = sorted(
-            (int(d.split("=")[1]) for d in os.listdir(sdir) if d.startswith("wb_bucket=")),
-        )
-        assert dirs == s["parts"]
+    stats = run_crawl(spark, io, cp, seed, host_policy_df(spark),
+                      CrawlConfig(wave_seconds=6.0, fetch_partitions=8))
+    assert len(stats) > 1
+    snaps = io._load_manifest("seed_base")["snapshots"]
+    assert [(s["wave"], s["mode"]) for s in snaps] == [(0, "overwrite")]
+    assert not io.exists("seed_state")
     # the merged table is consistent: archived keys ⊆ filled-status keys, and
     # every filled key is either archived or was pre-filled in the seed
-    st = io.read(spark, "seed_state")
+    st = read_seed_state(spark, io)
     filled = {(r.sheet, r.row_idx) for r in st.filter(F.trim("status") != "").collect()}
     archived = {
         (r.sheet, r.row_idx)
@@ -183,6 +283,3 @@ def test_wave_writeback_commits_o_wave_partitions(spark, tmp_path):
     }
     assert archived <= filled
     assert filled == archived | prefilled
-    # bucket column matches the deterministic expression everywhere
-    bad = st.filter(F.col("wb_bucket") != wb_bucket_expr()).count()
-    assert bad == 0
